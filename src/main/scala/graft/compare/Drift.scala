@@ -218,8 +218,7 @@ object Drift {
     // Eager row-block checkpoint, not a columnar persist(): both
     // rank passes read through .rdd and need a pinned partition
     // layout; InMemoryRelation decode on reuse reads measured several
-    // times slower (see OPTIMIZATION_r21.md). Reliable-capable via
-    // Materialize.rowBlocks when a checkpoint dir is configured.
+    // times slower (see OPTIMIZATION_r21.md).
     val counts = graft.util.Materialize.rowBlocks(
       side(ref, valueCol, 0).unionByName(side(cur, curCol, 1))
         .groupBy("v")

@@ -390,24 +390,18 @@ object Dedup {
     * the upstream LSH join sixteen-fold. Local checkpoints live in
     * executor block storage; on a cluster with executor loss or
     * dynamic allocation a lost block means recomputing the whole loop,
-    * so when the session has a RELIABLE checkpoint dir configured
-    * (`SparkContext.setCheckpointDir`) the rounds automatically
-    * checkpoint to it instead (`Dataset.checkpoint` — survives
-    * executor loss; loop shape unchanged). `reliableCheckpoint`
-    * overrides the auto-detection in either direction.
+    * so `reliableCheckpoint = true` checkpoints the rounds to the
+    * session's checkpoint dir instead (`Dataset.checkpoint` — survives
+    * executor loss; loop shape unchanged; see
+    * [[graft.util.Materialize]] for when those files are released).
     * Self-pairs are ignored; nodes never paired are absent (they are
     * their own singleton component by definition). */
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50,
-      reliableCheckpoint: Option[Boolean] = None): DataFrame = {
-    val useReliable = reliableCheckpoint.getOrElse(
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined)
-    require(!useReliable ||
-        pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliableCheckpoint=true requires SparkContext.setCheckpointDir")
+      reliableCheckpoint: Boolean = false): DataFrame = {
     def materialize(df: DataFrame): DataFrame =
-      graft.util.Materialize.rowBlocks(df, Some(useReliable))
+      graft.util.Materialize.rowBlocks(df, reliableCheckpoint)
     // Ids keep their NATIVE type: the algorithm needs only a total
     // order (greatest/least/min), which strings and UUIDs satisfy as
     // well as longs — a forced numeric cast would null out string ids

@@ -43,9 +43,7 @@ object DistributedPercentiles {
     // slower than checkpoint blocks (see OPTIMIZATION_r21.md); the
     // checkpoint also pins the partition layout the two
     // mapPartitionsWithIndex passes must agree on. Blocks are freed by
-    // the context cleaner once unreferenced. Materialize.rowBlocks
-    // upgrades to a reliable checkpoint when the session has a
-    // checkpoint dir (cluster-safe under executor loss).
+    // the context cleaner once unreferenced.
     val counts = graft.util.Materialize.rowBlocks(df
       .filter(col(s"`$column`").isNotNull)
       .select(col(s"`$column`").cast("double").as("v"))
@@ -105,20 +103,10 @@ object DistributedPercentiles {
     * pipelines up to [[BatchThreshold]] columns, one melted [[ofAll]]
     * pipeline beyond it. */
   def quartiles(df: DataFrame, columns: Seq[String]): Map[String, Seq[Option[Double]]] =
-    if (columns.sizeIs <= 1)
-      columns.map(c => c -> of(df, c, Seq(0.25, 0.5, 0.75))).toMap
-    else if (columns.sizeIs > BatchThreshold)
-      ofAll(df, columns, Seq(0.25, 0.5, 0.75))
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(columns.size, 4))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val fs = columns.map(c => Future(c -> of(df, c, Seq(0.25, 0.5, 0.75))))
-        Await.result(Future.sequence(fs), Duration.Inf).toMap
-      } finally pool.shutdown()
-    }
+    if (columns.sizeIs > BatchThreshold) ofAll(df, columns, Seq(0.25, 0.5, 0.75))
+    else graft.util.Scope.map(df.sparkSession, "percentiles", 4, columns)(identity) { c =>
+      c -> of(df, c, Seq(0.25, 0.5, 0.75))
+    }.toMap
 
   /** Exact percentiles at `ps` for every column in `columns` — the
     * batched multi-column generalization of [[of]]: the columns melt
@@ -143,8 +131,7 @@ object DistributedPercentiles {
       struct(lit(i).as("k"), col(s"`$n`").cast("double").as("v"))
     }: _*)).as("p")).select(col("p.k").as("k"), col("p.v").as("v"))
       .filter(col("v").isNotNull)
-    // Row-block checkpoint for the same reasons as [[of]]
-    // (reliable-capable via Materialize.rowBlocks).
+    // Row-block checkpoint for the same reasons as [[of]].
     val counts = graft.util.Materialize.rowBlocks(pairs
       .groupBy("k", "v").agg(count(lit(1)).as("c"))
       .orderBy("k", "v")

@@ -733,26 +733,17 @@ object ProfilePasses {
           }
         (qs, ms)
       } else if (exact) {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(cols.size, 4))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try {
-          val fs = cols.map { n =>
-            Future {
-              val Seq(q1, med, q3) = DistributedPercentiles.of(df, n, Seq(0.25, 0.5, 0.75))
-              val mad = med.map { m =>
-                DistributedPercentiles
-                  .of(df.select(abs(c(n) - m).as("__absdev")), "__absdev", Seq(0.5))
-                  .head.getOrElse(0.0)
-              }
-              n -> ((q1, med, q3), mad)
-            }
+        val done = graft.util.Scope.map(df.sparkSession, "robust_stats", 4, cols)(identity) { n =>
+          val Seq(q1, med, q3) = DistributedPercentiles.of(df, n, Seq(0.25, 0.5, 0.75))
+          val mad = med.map { m =>
+            DistributedPercentiles
+              .of(df.select(abs(c(n) - m).as("__absdev")), "__absdev", Seq(0.5))
+              .head.getOrElse(0.0)
           }
-          val done = Await.result(Future.sequence(fs), Duration.Inf)
-          (done.map { case (n, (qs, _)) => n -> qs }.toMap,
-            done.collect { case (n, (_, Some(m))) => n -> m }.toMap)
-        } finally pool.shutdown()
+          n -> ((q1, med, q3), mad)
+        }
+        (done.map { case (n, (qs, _)) => n -> qs }.toMap,
+          done.collect { case (n, (_, Some(m))) => n -> m }.toMap)
       } else {
         val qAggs = cols.map(n =>
           expr(s"percentile_approx(`$n`, array(0.25D, 0.5D, 0.75D), 10000)").as(s"${n}_qs"))

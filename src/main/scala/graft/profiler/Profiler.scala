@@ -3,11 +3,11 @@ package graft.profiler
 import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 import graft.compare.ProfileCompare
 import graft.model._
 import graft.types.ColumnBuckets
+import graft.util.Scope
 
 /** Profiler configuration.
   *
@@ -91,6 +91,11 @@ final case class ProfilerConfig(
   *   E. (optional) sample rows via CollectLimit.
   *
   * Only scalar aggregate rows ever reach the driver.
+  *
+  * The passes run overlapped in one [[graft.util.Scope]] (job
+  * descriptions `profile/<table>/<pass>`): a failing pass cancels the
+  * others' jobs, and `profile` releases its persisted input and
+  * rethrows the first failure only once every pass has stopped.
   */
 object Profiler {
 
@@ -142,43 +147,30 @@ object Profiler {
       cfg: ProfilerConfig,
       historical: Option[TableProfile]): TableProfile = {
 
-    def timed[T](pass: String)(body: => T): T = {
+    // The passes are INDEPENDENT Spark jobs (each ends in a scalar or
+    // tiny collect), so they run overlapped instead of strictly in
+    // sequence. Phase 1 holds the passes with no cross-pass inputs (A,
+    // A', A'', B, F, E); phase 2 (C, D) consumes pass-A statistics.
+    // Results are identical — only the job-submission order changes.
+    // Per-pass onPassTiming walls OVERLAP (their sum can exceed the
+    // profile's wall).
+    Scope(df.sparkSession, s"profile/$table", 6) { scope =>
+    def pass[T](name: String)(body: => T) = scope.fork(name) {
       val t0 = System.nanoTime()
       val out = body
-      cfg.onPassTiming(pass, (System.nanoTime() - t0) / 1e9)
+      cfg.onPassTiming(name, (System.nanoTime() - t0) / 1e9)
       out
     }
 
-    // The passes are INDEPENDENT Spark jobs (each ends in a scalar or
-    // tiny collect), so they run overlapped from a small driver-side
-    // pool instead of strictly in sequence: actions are only
-    // sequential when the driver calls them sequentially, and
-    // overlapping lets the next pass's tasks back-fill executor slots
-    // freed by the current pass's stragglers. Phase 1 holds the
-    // passes with no cross-pass inputs (A, A', A'', B, F, E); phase 2
-    // (C, D) consumes pass-A statistics. Results are identical — only
-    // the job-submission order changes. Per-pass onPassTiming walls
-    // now OVERLAP (their sum can exceed the profile's wall).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6, (r: Runnable) => {
-      val t = new Thread(r, "profiler-pass")
-      t.setDaemon(true)
-      t
-    })
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    try {
-
     // ---- Pass A: one wide aggregate over every non-distinct metric.
-    val fA = Future(timed("A_fused_agg")(fusedWideAgg(df, b, cfg).head()))
+    val fA = pass("A_fused_agg")(fusedWideAgg(df, b, cfg).head())
 
     // ---- Pass A'': percentiles, quarantined away from pass A (their
     // aggregate would knock it off WholeStageCodegen). Exact mode uses
     // the fully distributed rank-based algorithm — Spark's built-in
     // exact percentile merges a per-distinct-value map on ONE task;
     // approx mode is the bounded-sketch percentile_approx pass.
-    val fA2 = Future(timed("A2_percentiles") {
+    val fA2 = pass("A2_percentiles") {
       if (b.numeric.isEmpty) Map.empty[String, Seq[Option[Double]]]
       else if (cfg.exact) DistributedPercentiles.quartiles(df, b.numeric)
       else {
@@ -190,7 +182,7 @@ object Profiler {
           }
         }.toMap
       }
-    })
+    }
 
     // ---- Pass A': distinct counts. Exact mode plans an Expand (one
     // row copy per distinct aggregate), so it runs quarantined in its
@@ -198,19 +190,19 @@ object Profiler {
     // aggregates and were FUSED into pass A above — no extra scan.
     val fA1 =
       if (cfg.exact)
-        Some(Future(timed("A1_distinct")(
+        Some(pass("A1_distinct")(
           ProfilePasses.distinctCounts(df, b.all, exact = true,
-            spreadInput = cfg.spreadInput).head())))
+            spreadInput = cfg.spreadInput).head()))
       else None
 
     // ---- Pass B: duplicates. The digest projection is the default
     // whenever exact-oracle parity is not required: at 100 TB the
     // full-row variant's shuffle key is every column.
-    val fB = Future(timed("B_duplicates")(ProfilePasses.duplicateGroupCount(
-      df, cfg.duplicateHashProjection || !cfg.exact).collect()))
+    val fB = pass("B_duplicates")(ProfilePasses.duplicateGroupCount(
+      df, cfg.duplicateHashProjection || !cfg.exact).collect())
 
     // ---- Pass F: nested-column (multimodal) stats.
-    val fF = Future(timed("F_nested") {
+    val fF = pass("F_nested") {
       if (b.nested.isEmpty) Map.empty[String, NestedColumnStats]
       else {
         val r = ProfilePasses.nestedStats(df, b.nested).head()
@@ -242,18 +234,18 @@ object Profiler {
           }
         }.toMap
       }
-    })
+    }
 
     // ---- Pass E: samples.
-    val fE = Future(timed("E_samples") {
+    val fE = pass("E_samples") {
       if (!cfg.includeSamples) Nil: Seq[Map[String, Any]]
       else ProfilePasses.samples(sampleSource, cfg.sampleRows, cfg.sampleMethod, cfg.sampleSeed)
         .collect().toSeq.map { r =>
         r.schema.fields.map(_.name).zipWithIndex.map { case (n, i) => n -> r.get(i) }.toMap
       }
-    })
+    }
 
-    val row = Await.result(fA, Duration.Inf)
+    val row = fA.join()
     def getL(name: String): Long = {
       val i = row.fieldIndex(name)
       if (row.isNullAt(i)) 0L else row.getLong(i)
@@ -269,11 +261,11 @@ object Profiler {
 
     val rowCount = getL("row_count")
 
-    val quartileMap: Map[String, Seq[Option[Double]]] = Await.result(fA2, Duration.Inf)
+    val quartileMap: Map[String, Seq[Option[Double]]] = fA2.join()
     def getPct(colName: String, idx: Int): Option[Double] =
       quartileMap.get(colName).flatMap(_(idx))
 
-    val distRow = fA1.map(Await.result(_, Duration.Inf)).getOrElse(row)
+    val distRow = fA1.map(_.join()).getOrElse(row)
     val distinctCounts = b.all.map { n =>
       n -> (if (distRow.isNullAt(distRow.fieldIndex(s"${n}_distinct"))) 0L
             else distRow.getLong(distRow.fieldIndex(s"${n}_distinct")))
@@ -334,7 +326,7 @@ object Profiler {
       if (cfg.exact || rowCount == 0) b.all
       else b.all.filter(n =>
         distinctCounts(n) <= rowCount * cfg.frequentValuesMaxDistinctShare)
-    val fC = Future(timed("C_frequent_values") {
+    val fC = pass("C_frequent_values") {
       if (cfg.frequentValuesRowLimit.exists(rowCount > _) || fvCols.isEmpty)
         Map.empty[String, FrequentValue]
       else ProfilePasses.frequentValues(df, fvCols, rowCount).collect().map { r =>
@@ -344,13 +336,13 @@ object Profiler {
           frequency = r.getLong(r.fieldIndex("frequency")),
           percentage = round2(r.getDouble(r.fieldIndex("percentage"))))
       }.toMap
-    })
+    }
 
     // ---- Pass D: outliers, means/stddevs reused from pass A.
     val statPairs = b.numeric.flatMap { n =>
       for (m <- getDOpt(s"${n}_avg"); s <- getDOpt(s"${n}_stdev")) yield n -> (m, s)
     }.toMap
-    val fD = Future(timed("D_outliers") {
+    val fD = pass("D_outliers") {
       if (statPairs.isEmpty) Map.empty[String, Seq[Double]]
       else {
         val r = ProfilePasses.outliers(df, statPairs, cfg.anomalyThreshold, cfg.outlierLimit).head()
@@ -358,32 +350,26 @@ object Profiler {
           n -> r.getSeq[Double](r.fieldIndex(s"${n}_outliers"))
         }.filter(_._2.nonEmpty).toMap
       }
-    })
+    }
 
-    val dupRows = Await.result(fB, Duration.Inf)
-    val duplicateCount = if (dupRows.isEmpty) 0L else dupRows(0).getLong(0)
-    val frequentValues: Map[String, FrequentValue] = Await.result(fC, Duration.Inf)
-    val outliers: Map[String, Seq[Double]] = Await.result(fD, Duration.Inf)
-    val nestedStats: Map[String, NestedColumnStats] = Await.result(fF, Duration.Inf)
-    val samples: Seq[Map[String, Any]] = Await.result(fE, Duration.Inf)
-
+    val dupRows = fB.join()
     val current = TableProfile(
       table = table,
       timestamp = Instant.now().toString,
       rowCount = rowCount,
-      duplicateCount = duplicateCount,
+      duplicateCount = if (dupRows.isEmpty) 0L else dupRows(0).getLong(0),
       completeness = completeness,
       numericStats = numericStats,
       textPatterns = textPatterns,
       textLengthStats = textLengthStats,
       dateStats = dateStats,
-      frequentValues = frequentValues,
-      outliers = outliers,
-      samples = samples,
+      frequentValues = fC.join(),
+      outliers = fD.join(),
+      samples = fE.join(),
       anomalies = Nil,
       schemaShifts = Nil,
       trends = Trends.empty,
-      nestedStats = nestedStats)
+      nestedStats = fF.join())
 
     historical match {
       case Some(h) =>
@@ -394,7 +380,7 @@ object Profiler {
             cfg.maxHistory, cfg.historyRetentionDays))
       case None => current
     }
-    } finally { pool.shutdown() }
+    }
   }
 
   /** Convert a melt-stringified top-1 value back to the column's

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.util.Partitioning.spread
+import graft.util.Scope
 
 /** Vector similarity search over embedding columns
   * (`array<float>`/`array<double>`): brute-force cosine top-k as the
@@ -209,9 +210,7 @@ object Similarity {
     * the WHOLE spread corpus as a net loss — while a strict sample
     * (trainFraction < 1) always materializes: it is small, and cutting
     * it pins the sample so no pass rescans the corpus. Materialization
-    * goes through [[graft.util.Materialize.rowBlocks]] (row blocks
-    * locally, reliable checkpoint blocks when the session has a
-    * checkpoint dir — cluster-safe under executor loss). */
+    * goes through [[graft.util.Materialize.rowBlocks]]. */
   private def trainCache(
       df: DataFrame, idCol: String, fraction: Double,
       seed: Long, hashMode: String, reads: Int): DataFrame = {
@@ -307,7 +306,7 @@ object Similarity {
     // reads measured several times slower than checkpoint blocks (see
     // OPTIMIZATION_r21.md). Only the training sample materializes — at
     // trainFraction < 1 every Lloyd pass holds the sample, never the
-    // corpus. Reliable-checkpoint-capable via Materialize.rowBlocks.
+    // corpus.
     val cached = trainCache(df, idCol, trainFraction, trainSeed,
       trainHashMode, reads = 1 + kmeansIterations)
     val centroids =
@@ -415,26 +414,11 @@ object Similarity {
       cached: DataFrame, idCol: String, vecCol: String,
       numSubspaces: Int, subDim: Int, codebookSize: Int,
       iterations: Int, initOrder: Option[Seq[Column]]): Seq[Seq[Seq[Double]]] =
-    overlapped(0 until numSubspaces) { m =>
+    Scope.map(cached.sparkSession, "pq_codebooks", 5, 0 until numSubspaces)(_.toString) { m =>
       val sub = cached.select(col(idCol),
         slice(col(vecCol), m * subDim + 1, subDim).as("pq_sub"))
       kmeansCentroidsL2(sub, "pq_sub", codebookSize, iterations, initOrder)
     }
-
-  /** Run independent driver-coordinated Spark job chains concurrently
-    * (guide-standard overlap: actions are only sequential because the
-    * driver calls them sequentially). Results keep input order. */
-  private def overlapped[A, B](items: Seq[A])(f: A => B): Seq[B] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    if (items.sizeIs <= 1) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(items.size, 5))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
-      finally pool.shutdown()
-    }
-  }
 
   /** Encode: per subspace, the L2-nearest centroid — the same native
     * argmax expression the IVF assignment uses, under the L2
@@ -509,20 +493,14 @@ object Similarity {
     // Eager row-block checkpoint (see pqTopK note).
     val cached = trainCache(df, idCol, trainFraction, trainSeed, trainHashMode,
       reads = (numSubspaces + 1) * (1 + kmeansIterations))
-    val (coarse, codebooks) = {
-      // The coarse-cell chain is independent of the four codebook
-      // chains — overlap it with them too.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val coarseF = Future(kmeansCentroids(cached, vecCol, nCells,
-          kmeansIterations, centroidInitOrder))
-        val books = trainPqCodebooks(cached, idCol, vecCol, numSubspaces, subDim,
-          codebookSize, kmeansIterations, centroidInitOrder)
-        (Await.result(coarseF, Duration.Inf), books)
-      } finally pool.shutdown()
+    // The coarse-cell chain is independent of the codebook chains —
+    // overlap it with them too.
+    val (coarse, codebooks) = Scope(df.sparkSession, "ivf_pq", 2) { scope =>
+      val coarseF = scope.fork("coarse_cells")(kmeansCentroids(cached, vecCol, nCells,
+        kmeansIterations, centroidInitOrder))
+      val booksF = scope.fork("codebooks")(trainPqCodebooks(cached, idCol, vecCol,
+        numSubspaces, subDim, codebookSize, kmeansIterations, centroidInitOrder))
+      (coarseF.join(), booksF.join())
     }
     if (coarse.isEmpty || codebooks.exists(_.isEmpty))
       return emptyTopK(df, idCol, queries, queryIdCol)

@@ -44,8 +44,8 @@ import org.apache.spark.sql.functions._
   * groupBy plus one map-side replace; only the single best-pair row is
   * collected per round (bounded driver state, like the k-means
   * centroids). The vocabulary frame is re-persisted each round and
-  * checkpointed periodically (reliable dir when configured, else
-  * localCheckpoint) so lineage stays flat across hundreds of rounds —
+  * checkpointed periodically (Materialize.rowBlocks local blocks)
+  * so lineage stays flat across hundreds of rounds —
   * same discipline as [[graft.dedup.Dedup.connectedComponents]].
   * Encoding is a map-side native expression with no shuffle at all.
   */

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.profiler.{Profiler, ProfilerConfig}
 
 /** Diagnostic: per-pass wall-clock breakdown of a table profile.
@@ -19,15 +17,7 @@ object ProfilePassBench {
     val table = if (args.length > 1) args(1) else "lineitem"
     val exact = args.contains("exact")
     val noPersist = args.contains("nopersist")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("32")
 
     val df = spark.read.parquet(s"$sfDir/$table.parquet")
     df.count() // warmup: parquet footers + scan codegen

@@ -16,31 +16,30 @@ import org.apache.spark.sql.Dataset
   * The fault-tolerance rule (this helper's reason to exist):
   * `localCheckpoint` truncates lineage to executor-local blocks — on a
   * cluster, an executor lost during the read window fails the job
-  * instead of recomputing. When the session has a RELIABLE checkpoint
-  * directory configured (`SparkContext.setCheckpointDir`), materialize
-  * through `Dataset.checkpoint` instead: same eager cut, blocks
-  * survive executor loss. `reliable` overrides the auto-detection in
-  * either direction (mirroring `Dedup.connectedComponents`'s
-  * `reliableCheckpoint` contract). Results are identical in both
-  * modes — only the storage of the cut changes; MaterializeSpec pins
-  * that equivalence.
+  * instead of recomputing. `reliable = true` materializes through
+  * `Dataset.checkpoint` into the session's checkpoint dir instead:
+  * same eager cut, blocks survive executor loss. A configured dir
+  * alone never selects it. Results are identical in both modes — only
+  * the storage of the cut changes; MaterializeSpec pins that
+  * equivalence.
   *
-  * Block lifetime: checkpoint blocks free when the ContextCleaner GCs
-  * the unreferenced RDD (driver periodic GC, default 30 min) — fine
-  * for batch pipelines and the bench's short-lived sessions; an
-  * operator needing deterministic release on a precise scope keeps
-  * persist + unpersist instead (SkewJoin documents that choice).
+  * Block lifetime: local blocks free when the ContextCleaner GCs the
+  * unreferenced RDD (driver periodic GC, default 30 min). Reliable
+  * checkpoint files stay on disk until the caller deletes them, unless
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` is set — hence
+  * explicit request only. An operator needing deterministic release on
+  * a precise scope keeps persist + unpersist instead (SkewJoin
+  * documents that choice).
   */
 object Materialize {
 
-  /** Eagerly materialize `ds` as row blocks and truncate its lineage.
-    * Local executor blocks by default; reliable-checkpoint blocks when
-    * the session has a checkpoint dir (or `reliable = Some(true)`). */
-  def rowBlocks[T](ds: Dataset[T], reliable: Option[Boolean] = None): Dataset[T] = {
-    val sc = ds.sparkSession.sparkContext
-    val useReliable = reliable.getOrElse(sc.getCheckpointDir.isDefined)
-    require(!useReliable || sc.getCheckpointDir.isDefined,
-      "Materialize.rowBlocks(reliable = Some(true)) requires SparkContext.setCheckpointDir")
-    if (useReliable) ds.checkpoint(eager = true) else ds.localCheckpoint(eager = true)
-  }
+  /** Eagerly materialize `ds` as row blocks and truncate its lineage:
+    * local executor blocks, or reliable-checkpoint files when
+    * `reliable` (which requires a checkpoint dir). */
+  def rowBlocks[T](ds: Dataset[T], reliable: Boolean = false): Dataset[T] =
+    if (reliable) {
+      require(ds.sparkSession.sparkContext.getCheckpointDir.isDefined,
+        "Materialize.rowBlocks(reliable = true) requires SparkContext.setCheckpointDir")
+      ds.checkpoint(eager = true)
+    } else ds.localCheckpoint(eager = true)
 }

@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 import graft.model.{ValidationResult, ValidationRule}
+import graft.util.Scope
 
 /** Scalar-rule validator: the Spark-native replacement for
   * `sparvi.validations.run_validations`
@@ -24,9 +25,12 @@ import graft.model.{ValidationResult, ValidationRule}
   *
   * Scale notes: each rule is one Spark job over the (ideally
   * persisted) input views; Catalyst pushes rule predicates into the
-  * scan. `parallelism > 1` submits rules from a thread pool — Spark's
-  * scheduler interleaves the jobs across the cluster, which hides the
-  * per-job driver latency when rules are many and small.
+  * scan. `parallelism > 1` submits rules from a [[graft.util.Scope]] —
+  * Spark's scheduler interleaves the jobs across the cluster, which
+  * hides the per-job driver latency when rules are many and small.
+  * A rule's own failure lands in its result ([[runOne]]); only a fatal
+  * error triggers the scope's cancel-on-failure contract (cancel the
+  * other rules' jobs, wait for every rule, rethrow the first error).
   */
 object Validator {
 
@@ -34,32 +38,15 @@ object Validator {
       spark: SparkSession,
       rules: Seq[ValidationRule],
       parallelism: Int = 1): Seq[ValidationResult] = {
-    if (parallelism <= 1) rules.map(runOne(spark, _))
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      import java.util.concurrent.Executors
-      val pool = Executors.newFixedThreadPool(parallelism)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val fs = rules.map { r =>
-          Future {
-            // Tag every rule job with a named scheduler pool: under a
-            // FAIR-mode session (spark.scheduler.mode=FAIR) concurrent
-            // rules then share cluster slots fairly instead of queuing
-            // FIFO behind one wide rule; under FIFO this is a no-op.
-            // The property is thread-local, so pool worker threads must
-            // set it per task (and clear it — threads are reused).
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft-validation")
-            try runOne(spark, r)
-            finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-          }
-        }
-        // Future.sequence preserves input order: result i is rule i,
-        // exactly as the sequential path reports.
-        Await.result(Future.sequence(fs), Duration.Inf)
-      } finally pool.shutdown()
-    }
+    // Rule jobs run in a named scheduler pool: under a FAIR-mode session
+    // (spark.scheduler.mode=FAIR) concurrent rules then share cluster
+    // slots fairly instead of queuing FIFO behind one wide rule; under
+    // FIFO it is a no-op. Set once here; the scope's threads inherit it.
+    val sc = spark.sparkContext
+    val previous = sc.getLocalProperty("spark.scheduler.pool")
+    sc.setLocalProperty("spark.scheduler.pool", "graft-validation")
+    try Scope.map(spark, "validate", parallelism, rules)(_.name)(runOne(spark, _))
+    finally sc.setLocalProperty("spark.scheduler.pool", previous)
   }
 
   def runOne(spark: SparkSession, rule: ValidationRule): ValidationResult =

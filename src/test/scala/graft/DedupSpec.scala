@@ -480,29 +480,21 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkTestBase {
       (20L, 21L), (20L, 22L), (20L, 23L), (30L, 31L)).toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val sc = s.sparkContext
-    try {
-      // With a checkpoint dir set, auto-detection switches the rounds
-      // to reliable Dataset.checkpoint — same components either way.
-      sc.setCheckpointDir(dir)
-      val reliable = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
-      reliable shouldBe local
-      // Explicit override back to local still works under the dir.
-      val forcedLocal = Dedup.connectedComponents(pairs, "id_a", "id_b",
-        reliableCheckpoint = Some(false)).as[(Long, Long)].collect().toMap
-      forcedLocal shouldBe local
-    } finally {
-      // No public unset API: clear the private conf so later suites
-      // keep exercising the localCheckpoint path.
-      val f = sc.getClass.getDeclaredMethod("checkpointDir_$eq", classOf[Option[String]])
-      f.invoke(sc, None)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    withCheckpointDir { dir =>
+      def files = org.apache.commons.io.FileUtils.listFiles(dir, null, true).size
+      // A configured dir alone no longer switches the rounds to
+      // reliable checkpoints: same components, no checkpoint files.
+      Dedup.connectedComponents(pairs, "id_a", "id_b")
+        .as[(Long, Long)].collect().toMap shouldBe local
+      files shouldBe 0
+      // Explicit request: reliable Dataset.checkpoint, same components.
+      Dedup.connectedComponents(pairs, "id_a", "id_b", reliableCheckpoint = true)
+        .as[(Long, Long)].collect().toMap shouldBe local
+      files should be > 0
     }
     // Asking for reliable checkpointing without a dir fails fast.
     an[IllegalArgumentException] should be thrownBy
-      Dedup.connectedComponents(pairs, "id_a", "id_b", reliableCheckpoint = Some(true))
+      Dedup.connectedComponents(pairs, "id_a", "id_b", reliableCheckpoint = true)
   }
 
   test("connectedComponents works on string ids (native ordering, no numeric cast)") {

@@ -8,49 +8,40 @@ import graft.util.Materialize
 /** Pins the [[graft.util.Materialize.rowBlocks]] contract: local and
   * reliable checkpoint modes compute IDENTICAL results (the r22
   * fault-tolerance toggle must never change what an operator returns),
-  * auto-detection keys on the session's checkpoint dir, and the
-  * explicit reliable request without a checkpoint dir fails loudly
-  * instead of silently degrading to executor-local blocks. */
+  * reliable files are written only on explicit request (a configured
+  * checkpoint dir alone keeps local blocks), and the reliable request
+  * without a checkpoint dir fails loudly instead of silently degrading
+  * to executor-local blocks. */
 class MaterializeSpec extends AnyFunSuite with SparkTestBase {
 
   private def frame = employeesDf
     .groupBy("department").agg(count(lit(1)).as("n"), avg("salary").as("avg_salary"))
 
+  private def rows(ds: org.apache.spark.sql.DataFrame) = ds.collect().map(_.toString).sorted
+
   test("local and reliable modes compute identical results") {
-    val local = Materialize.rowBlocks(frame, Some(false))
-      .collect().map(_.toString).sorted
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    try {
-      spark.sparkContext.setCheckpointDir(dir)
-      val reliable = Materialize.rowBlocks(frame, Some(true))
-        .collect().map(_.toString).sorted
-      assert(local.sameElements(reliable))
-      // Auto-detection: with a checkpoint dir configured, the default
-      // resolves to reliable — still the same rows.
-      val auto = Materialize.rowBlocks(frame)
-        .collect().map(_.toString).sorted
-      assert(local.sameElements(auto))
-    } finally {
-      // Clear so later suites (and the auto-detect test below) see the
-      // sessions's default no-checkpoint-dir state again.
-      spark.sparkContext.setCheckpointDir(null)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
+    val local = rows(Materialize.rowBlocks(frame))
+    withCheckpointDir { dir =>
+      def files = org.apache.commons.io.FileUtils.listFiles(dir, null, true).size
+      // A configured dir no longer changes the mode: the default still
+      // writes local blocks, never checkpoint files.
+      assert(local.sameElements(rows(Materialize.rowBlocks(frame))))
+      assert(files == 0)
+      assert(local.sameElements(rows(Materialize.rowBlocks(frame, reliable = true))))
+      assert(files > 0)
     }
   }
 
-  test("reliable=Some(true) without a checkpoint dir fails loudly") {
+  test("reliable=true without a checkpoint dir fails loudly") {
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
     intercept[IllegalArgumentException] {
-      Materialize.rowBlocks(frame, Some(true))
+      Materialize.rowBlocks(frame, reliable = true)
     }
     ()
   }
 
   test("lineage is truncated: the result plan reads materialized blocks") {
-    val m = Materialize.rowBlocks(frame, Some(false))
+    val m = Materialize.rowBlocks(frame)
     // A checkpointed frame's plan is a leaf over an RDD scan — no
     // parquet/local-relation scan, no aggregate left to recompute.
     val plan = m.queryExecution.optimizedPlan.toString

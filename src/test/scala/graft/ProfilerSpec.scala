@@ -461,4 +461,65 @@ class ProfilerSpec extends AnyFunSuite with Matchers with SparkTestBase {
     out(1).isNullAt(out(1).fieldIndex("median")) shouldBe true
     out(1).getAs[Long]("n_outliers") shouldBe 0L
   }
+
+  test("a failing pass cancels its running siblings before the input is released") {
+    import java.util.concurrent.TimeUnit
+    import org.apache.spark.sql.functions.{col, udf}
+    import org.apache.spark.storage.StorageLevel
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-profile-fail").toFile
+    try {
+      val rows = 200L
+      spark.range(rows).selectExpr("id", "id % 7 AS k").coalesce(1)
+        .write.mode("overwrite").parquet(dir.toString)
+      // One split: with spreadMinBytes = 0 the profiler spreads and
+      // persists a repartitioned copy, so pass E (samples) re-reads
+      // this frame and blocks in the UDF while the other passes read
+      // the cache.
+      val slow = udf((x: Long) => ProfilerSpec.evaluate(x))
+      val df = spark.read.parquet(dir.toString).withColumn("v", slow(col("id")))
+      ProfilerSpec.reset(freeEvaluations = rows)
+      // The persisted input has the spread frame's plan; its storage
+      // level reads the session's cache.
+      def inputLevel = graft.util.Partitioning.spreadIfLarge(df, 0L).storageLevel
+      var levelDuringPasses = StorageLevel.NONE
+      val failPassA: (String, Double) => Unit = (pass, _) =>
+        if (pass == "A_fused_agg") {
+          ProfilerSpec.blocked.await(30, TimeUnit.SECONDS) shouldBe true
+          levelDuringPasses = inputLevel
+          throw new IllegalStateException("pass A failed")
+        }
+      val thrown = intercept[IllegalStateException] {
+        Profiler.profile(df, "slow", ProfilerConfig(includeSamples = true,
+          spreadMinBytes = 0L, onPassTiming = failPassA))
+      }
+      thrown.getMessage shouldBe "pass A failed"
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      sc.statusTracker.getActiveJobIds shouldBe empty
+      levelDuringPasses shouldBe StorageLevel.MEMORY_AND_DISK
+      inputLevel shouldBe StorageLevel.NONE
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+}
+
+object ProfilerSpec {
+  private val evaluations = new java.util.concurrent.atomic.AtomicLong
+  @volatile private var free = 0L
+  @volatile var blocked = new java.util.concurrent.CountDownLatch(1)
+
+  def reset(freeEvaluations: Long): Unit = {
+    evaluations.set(0L)
+    free = freeEvaluations
+    blocked = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  /** Identity, but every evaluation past the first `free` waits until
+    * Spark kills its task. */
+  def evaluate(x: Long): Long = {
+    if (evaluations.incrementAndGet() > free) {
+      blocked.countDown()
+      SparkTestBase.waitUntilKilled()
+    }
+    x
+  }
 }

@@ -12,6 +12,22 @@ trait SparkTestBase { self: Suite =>
 
   lazy val spark: SparkSession = SparkTestBase.session
 
+  /** Run `body` with a fresh checkpoint dir set on the shared session,
+    * then unset it (Spark has no public unset; this clears the private
+    * field) so later suites see the no-checkpoint-dir default again,
+    * and delete the dir. */
+  def withCheckpointDir[A](body: java.io.File => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    val sc = spark.sparkContext
+    sc.setCheckpointDir(dir.toString)
+    try body(dir)
+    finally {
+      sc.getClass.getDeclaredMethod("checkpointDir_$eq", classOf[Option[String]])
+        .invoke(sc, None)
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+  }
+
   /** A1 golden table: 10 rows, 2 null ages, 2 null salaries, 1 null
     * department. */
   def employeesDf: DataFrame = {
@@ -46,6 +62,15 @@ trait SparkTestBase { self: Suite =>
 }
 
 object SparkTestBase {
+
+  /** Inside a task: wait until Spark kills it, bounded at a minute so a
+    * broken cancel cannot hang the suite. */
+  def waitUntilKilled(): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (!org.apache.spark.TaskContext.get().isInterrupted() && System.nanoTime() < deadline)
+      Thread.sleep(20)
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")
